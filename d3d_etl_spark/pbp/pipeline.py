@@ -5,8 +5,12 @@ The reference chains subprocesses with CSV files between stages; here every
 arrow is a DataFrame hand-off inside one session, with the two reused
 intermediates (`parsed`, `with_metrics` — each consumed by 3+ downstream
 stages) cached, mirroring the reference's materialization points
-(parsed_pbp / pbp_with_metrics, SURVEY.md §3.1). Pass `checkpoint_dir` to
-persist them as parquet instead (the debugging/restart surface at scale).
+(parsed_pbp / pbp_with_metrics, SURVEY.md §3.1). `parsed` is persisted
+EAGERLY, when `run_analytics` returns; `pbp_with_metrics` is persisted
+LAZILY, on the first access to `with_metrics` or to any board that reads
+it. Pass `checkpoint_dir` to persist them as parquet instead (the
+debugging/restart surface at scale). The returned outputs object assumes a
+single thread (see AnalyticsOutputs).
 
     raw pbp ─ parse ─┬─ expected-runs (long + wide matrix)
                      ├─ linear weights ──┐
@@ -55,7 +59,11 @@ class AnalyticsOutputs:
     materialized eagerly at construction — it is the spine every consumer
     shares and the barrier keeps the parse out of broadcast-build threads;
     `with_metrics` materializes on the first access to it or to any board
-    (all boards read it)."""
+    (all boards read it).
+
+    Single-threaded use only: `cached_property` takes no lock, so two
+    threads touching `with_metrics` (or a board) at once could each build
+    and materialize it."""
 
     def __init__(
         self,

@@ -15,6 +15,7 @@ indifference, fouled out / infield fly / dropped foul, and no-play lines.
 from __future__ import annotations
 
 import random
+import re
 
 _NAMES = ["JONES", "SMITH", "DAVIS", "MILLER", "WILSON", "TAYLOR", "BROWN", "CLARK", "LEWIS"]
 
@@ -241,6 +242,14 @@ def generate_game(rng: random.Random, contest_id: int, year: int = 2024,
 def generate_games(n_games: int, seed: int = 42) -> list[tuple]:
     rng = random.Random(seed)
     return [row for g in range(n_games) for row in generate_game(rng, g)]
+
+
+def games_for(sf_dir: str) -> int:
+    """Games generated for a data directory: 3000 per unit of its sf<scale>
+    token (sf0.01 when it has none), at least 10."""
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else 0.01
+    return max(10, int(sf * 3000))
 
 
 RAW_SCHEMA = (

@@ -232,7 +232,9 @@ def agg_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # part='unpivot' (A9) — real .unpivot over the wide conditional counts,
-    # read from the SHARED events aggregate (same sums, zero extra scan)
+    # built from the same ev_base aggregate expression as the conditional
+    # arm; not checkpointed, so it is recomputed here (one extra events
+    # scan + partial agg, measured cheaper than sharing it — see above)
     wide = ev_base.select(
         "user_id",
         F.col("_c").alias("clicks"),

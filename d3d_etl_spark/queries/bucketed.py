@@ -4,7 +4,7 @@ the query path, not just the synthetic pin").
 
 The parsed-play spine (the table every domain query re-joins; reference
 stores it as parsed_pbp CSV between stages, processors/run_all.py) is
-persisted ONCE per scale as a parquet table bucketed+sorted by contest_id —
+persisted once per state key as a parquet table bucketed+sorted by contest_id —
 the reference's natural co-location key (every per-game fact joins on it:
 pitcher assignments, lineups, win-prob states). The query then runs a
 game-total aggregation AND a fact-fact join-back AND a (contest_id, half)
@@ -23,18 +23,12 @@ writer's _000NN file-name tags) — no rewrite.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark import state
 from d3d_etl_spark.plans.inspect import count_shuffles
-from d3d_etl_spark.queries.domain import (
-    _CACHE_DIR,
-    _ensure_materialized,
-    _games_for,
-    materialized_parsed,
-)
+from d3d_etl_spark.queries.domain import materialized_parsed
 from d3d_etl_spark.queries.registry import register
 
 _N_BUCKETS = 8
@@ -42,12 +36,12 @@ _SPINE_COLS_DDL = (
     "contest_id BIGINT, play_id BIGINT, half STRING, "
     "division STRING, year INT, runs_on_play INT"
 )
-_SPINE_PATH_TPL = os.path.join(_CACHE_DIR, "bucketed_spine_{n}")
-_SPINE_GLOB = os.path.join(_CACHE_DIR, "bucketed_spine_*", "*.parquet")
+_SPINE_GLOB = state.parquet_glob("bucketed_spine")
 
 
 def bucketed_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The parsed-play spine as a bucketed table (S19 memoized per scale).
+    """The parsed-play spine as a bucketed table (persisted state, keyed on
+    the parsed plays it projects).
 
     Build path: narrow projection of materialized_parsed, repartitioned to
     exactly one partition per bucket (repartition and bucketBy share the
@@ -55,13 +49,9 @@ def bucketed_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     file per bucket -> the scan also reports the sortBy order, letting
     sort-merge joins skip their local sorts).
     """
-    n = _games_for(sf_dir)
-    table = f"z_spine_bkt_{n}"
-    path = _SPINE_PATH_TPL.format(n=n)
-    marker = path + ".done"
 
     def build(tmp: str) -> None:
-        tmp_table = f"{table}_tmp"
+        tmp_table = "z_spine_bkt_build"
         spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
         (
             materialized_parsed(spark, sf_dir)
@@ -75,10 +65,11 @@ def bucketed_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
             .saveAsTable(tmp_table)
         )
         # external table: dropping the catalog entry keeps the files, which
-        # _ensure_materialized then os.replace's into the final path
+        # state.ensure then os.replace's into the final path
         spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
 
-    _ensure_materialized(path, marker, _SPINE_PATH_TPL.format(n="*"), build)
+    path = state.ensure("bucketed_spine", sf_dir, build)
+    table = f"z_spine_bkt_{state.key('bucketed_spine', sf_dir)}"
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {table} ({_SPINE_COLS_DDL}) "
         f"USING PARQUET CLUSTERED BY (contest_id) "

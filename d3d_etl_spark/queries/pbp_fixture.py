@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark import state
 from d3d_etl_spark.pbp.events import EVENT_OUTS, EVENT_RULES, PA_EVENTS
 from d3d_etl_spark.pbp.state import _BATTER_DEST, _BATTER_VERBS, _RUNNER_ONLY
 from d3d_etl_spark.queries.registry import register
@@ -717,11 +718,7 @@ def _corpus_ctes() -> str:
     """fxc .. tracec: the per-game CTE chain over the raw_games glob, with
     contest_id threaded through the recursion (seed = one row per game,
     step joins on (contest_id, play_id + 1))."""
-    import os as _os
-
-    from d3d_etl_spark.queries.domain import _CACHE_DIR
-
-    raw_glob = _os.path.join(_CACHE_DIR, "raw_games_*", "*.parquet")
+    raw_glob = state.parquet_glob("raw_games")
     seg_gate = "event NOT IN ('NP', 'SUB', 'FOUL_ERR')"
     runner_only = ", ".join(f"'{c}'" for c in sorted(_RUNNER_ONLY))
     seg1_runner_only = ", ".join(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark import state
 from d3d_etl_spark.io import fan_out, load_table, read_parquet, table_count
 from d3d_etl_spark.operators.similarity import (
     assign_nearest_centroid,
@@ -653,11 +654,11 @@ def sim_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # z_sim_incremental — incremental ANN-index maintenance: the embedding twin
 # of z_corpus_incremental (round-4 north-star addition). The index state —
 # batch-1 centroid components and batch-1 cell assignments — is persisted
-# to parquet ONCE per scale; the measured query handles a new ingest batch
-# alone: assign each new vector against the STORED centroids, probe its
-# top-nprobe cells, fetch ONLY the stored assignments in those cells (plus
-# their vectors, by selective semi-join), and report each new vector's
-# nearest existing neighbor. The old corpus is never re-embedded,
+# to parquet once per embeddings table; the measured query handles a new
+# ingest batch alone: assign each new vector against the STORED centroids,
+# probe its top-nprobe cells, fetch ONLY the stored assignments in those
+# cells (plus their vectors, by selective semi-join), and report each new
+# vector's nearest existing neighbor. The old corpus is never re-embedded,
 # re-assigned, or re-scanned beyond the candidate cells — at 100 TB, store
 # the vector table partitioned by assigned cell and the candidate fetch is
 # literal partition pruning.
@@ -695,12 +696,6 @@ def sim_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #     not serving) and the serving walls measure per-batch serving cost.
 # ---------------------------------------------------------------------------
 
-import os as _os
-
-from d3d_etl_spark.queries.domain import _CACHE_DIR as _IVF_CACHE_DIR
-from d3d_etl_spark.queries.domain import _ensure_materialized as _ensure_ivf_state
-from d3d_etl_spark.queries.domain import sf_tag as _ivf_tag
-
 # floor ingest modulus: tiny test corpora still need a few hundred batch
 # rows, so the modulus never drops below 4 (batch <= 25% of the corpus)
 _INC_MOD = 4
@@ -728,19 +723,11 @@ _PQ_INC_PAIRS_PER_TASK = 50_000
 # under _ADC_ROWS_PER_TASK rows at any corpus size (VERDICT r8 weak #1)
 _ADC_BC_ROWS = 262_144
 _ADC_ROWS_PER_TASK = 262_144
-# "_s" = SCALED-K state-family version (round 10): cells trained over the
-# clusterable serving corpus with K = ceil(sqrt(N_old)) — a new family
-# name so stale fixed-K / raw-corpus caches can never serve this contract
-# (the "_t" precedent: a contract change renames the family)
-_IVF_CENTS_TPL = _os.path.join(_IVF_CACHE_DIR, "ivf_cents_s_{tag}")
-_IVF_ASSIGN_TPL = _os.path.join(_IVF_CACHE_DIR, "ivf_assign_s_{tag}")
-_IVF_CENTS_GLOB = _os.path.join(_IVF_CACHE_DIR, "ivf_cents_s_*", "*.parquet")
-_IVF_ASSIGN_GLOB = _os.path.join(_IVF_CACHE_DIR, "ivf_assign_s_*", "*.parquet")
-
-from d3d_etl_spark.oracle import register_cache_family as _register_family  # noqa: E402
-
-for _fam in ("ivf_cents_s", "ivf_assign_s", "pq_icents_r", "pq_cb_r", "pq_codes_r"):
-    _register_family(_fam, _ivf_tag)
+# cells trained over the clusterable serving corpus with
+# K = ceil(sqrt(N_old)); a change to that contract bumps the family's
+# version in d3d_etl_spark/state.py
+_IVF_CENTS_GLOB = state.parquet_glob("ivf_cents")
+_IVF_ASSIGN_GLOB = state.parquet_glob("ivf_assign")
 
 
 # ---------------------------------------------------------------------------
@@ -779,7 +766,7 @@ def clustered_corpus(emb: DataFrame, g: int) -> DataFrame:
 def serving_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """(corpus, bmod) for the incremental serving family at this scale.
 
-    The table count feeding (g, bmod) is memoized per scale (r13): every
+    The table count feeding (g, bmod) is memoized per table file (r13): every
     serving query re-derived the same scalar with a fresh count job on
     every invocation — pure driver-job tax, identical value each time."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -856,7 +843,8 @@ def _sample_seeded_cells(old: DataFrame, k: int) -> DataFrame:
 
 
 def ivf_index_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """(centroids, assignments) of the batch-1 index, persisted per scale.
+    """(centroids, assignments) of the batch-1 index, persisted per
+    embeddings table.
 
     Centroids: (label, pos, c) exact-integer-sum components over
     K = ceil(sqrt(N_old)) coarse cells LEARNED from the old serving-corpus
@@ -868,10 +856,6 @@ def ivf_index_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     incremental oracle reads THIS persisted state, so training changes the
     index content, not the serving contract."""
     import math
-
-    tag = _ivf_tag(sf_dir)
-    cents_path = _IVF_CENTS_TPL.format(tag=tag)
-    assign_path = _IVF_ASSIGN_TPL.format(tag=tag)
 
     def old_batch() -> DataFrame:
         corp, bmod = serving_corpus(spark, sf_dir)
@@ -887,20 +871,14 @@ def ivf_index_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
         trained = old.join(cells.hint("shuffle_hash"), "vec_id")
         label_centroids(trained, "label").write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(
-        cents_path, cents_path + ".done", _IVF_CENTS_TPL.format(tag="*"), build_cents
-    )
-    cents = read_parquet(spark, cents_path)
+    cents = read_parquet(spark, state.ensure("ivf_cents", sf_dir, build_cents))
 
     def build_assign(tmp: str) -> None:
         assign_nearest_centroid(old_batch(), cents, "label").write.mode(
             "overwrite"
         ).parquet(tmp)
 
-    _ensure_ivf_state(
-        assign_path, assign_path + ".done", _IVF_ASSIGN_TPL.format(tag="*"), build_assign
-    )
-    return cents, read_parquet(spark, assign_path)
+    return cents, read_parquet(spark, state.ensure("ivf_assign", sf_dir, build_assign))
 
 
 # The IVF-state probe -> candidate CTE chain, shared by z_sim_incremental
@@ -2853,7 +2831,13 @@ def z_sim_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: cb's localCheckpoint is gone — pq_encode broadcasts the codebook
     # exactly once, so the checkpoint was a single-consumer barrier; the
     # training agg now runs inside the encode's broadcast-build job and the
-    # scoring stages overlap with it instead of waiting (guide §2.6)
+    # scoring stages overlap with it instead of waiting (guide §2.6).
+    # Training there is safe, unlike the parse behind run_analytics's
+    # barrier (pbp/pipeline.py): pq_codebooks is ONE hash-seeded Lloyd
+    # step, a single partial-aggregated shuffle job with no Python worker
+    # and no iteration, whose tasks still run at full parallelism; the
+    # build thread only collects its result, _PQ_M x _PQ_KS x dsub = 1024
+    # rows at any corpus size, far inside the broadcast size and timeout.
     surv = emb.join(F.broadcast(drops), "vec_id", "left_anti")
     cb = pq_codebooks(surv, _DIM, _PQ_M, _PQ_KS)
     codes = pq_encode(surv, cb, _DIM, _PQ_M)
@@ -3012,7 +2996,7 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # z_sim_pq_incremental — incremental PQ index maintenance + serving: the
 # PQ lifecycle's state-shaped daily path (the z_sim_incremental pattern
 # applied to the compressed index). Batch-1 state — the trained codebooks
-# and the old corpus's CODES — is persisted to parquet once per scale; the
+# and the old corpus's CODES — is persisted to parquet once per index; the
 # measured query handles the new fixed-size ingest batch alone:
 #   1. encode new vectors against the STORED codebooks (map-only after
 #      a broadcast — no retrain; codebook drift is the documented
@@ -3028,25 +3012,21 @@ def z_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no row (nothing servable from the index without a wider probe).
 # ---------------------------------------------------------------------------
 
-# "_r" = RESIDUAL-encoded state-family version (round 11): codes quantize
-# (vector - assigned coarse centroid) integer residuals, the FAISS IVFADC
-# default (Jégou, Douze, Schmid 2011 §IV) and the repo's own pinned
-# doctrine (z_sim_ivfpq_residual: residual codes >= 3/25 better than raw
-# at identical storage). A new family name so stale raw-code caches can
-# never serve the residual contract (the "_s"/"_t" precedent).
-_PQ_ICENTS_TPL = _os.path.join(_IVF_CACHE_DIR, "pq_icents_r_{tag}")
-_PQ_CB_TPL = _os.path.join(_IVF_CACHE_DIR, "pq_cb_r_{tag}")
-_PQ_CODES_TPL = _os.path.join(_IVF_CACHE_DIR, "pq_codes_r_{tag}")
-_PQ_ICENTS_GLOB = _os.path.join(_IVF_CACHE_DIR, "pq_icents_r_*", "*.parquet")
-_PQ_CB_GLOB = _os.path.join(_IVF_CACHE_DIR, "pq_cb_r_*", "*.parquet")
-_PQ_CODES_GLOB = _os.path.join(_IVF_CACHE_DIR, "pq_codes_r_*", "*.parquet")
+# RESIDUAL-encoded state (round 11): codes quantize (vector - assigned
+# coarse centroid) integer residuals, the FAISS IVFADC default (Jégou,
+# Douze, Schmid 2011 §IV) and the repo's own pinned doctrine
+# (z_sim_ivfpq_residual: residual codes >= 3/25 better than raw at
+# identical storage).
+_PQ_ICENTS_GLOB = state.parquet_glob("pq_icents")
+_PQ_CB_GLOB = state.parquet_glob("pq_cb")
+_PQ_CODES_GLOB = state.parquet_glob("pq_codes")
 
 
 def pq_index_state(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(icents, codebooks, old_codes): the batch-1 PQ index, persisted per
-    scale, RESIDUAL-encoded (round 11, VERDICT r10 nit 1): codes quantize
+    IVF index, RESIDUAL-encoded (round 11, VERDICT r10 nit 1): codes quantize
     r = x - q1(x) — the old vector minus its assigned coarse centroid,
     integer-quantized per cell — not x itself. The coarse quantizer
     absorbs the between-cell variance, so the (m, ks) bit budget covers
@@ -3060,10 +3040,6 @@ def pq_index_state(
     `ic` CTE, K*dim rows (broadcast-sized at any corpus scale)."""
     from d3d_etl_spark.operators.pq import pq_subspace_comps
 
-    tag = _ivf_tag(sf_dir)
-    ic_path = _PQ_ICENTS_TPL.format(tag=tag)
-    cb_path = _PQ_CB_TPL.format(tag=tag)
-    codes_path = _PQ_CODES_TPL.format(tag=tag)
     _, assign = ivf_index_state(spark, sf_dir)
     lab = assign.select("vec_id", F.col("assigned_label").alias("label"))
 
@@ -3081,10 +3057,7 @@ def pq_index_state(
             F.round(F.sum("xs") / F.count("*")).cast("long").alias("c_int")
         ).write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(
-        ic_path, ic_path + ".done", _PQ_ICENTS_TPL.format(tag="*"), build_icents
-    )
-    icents = read_parquet(spark, ic_path)
+    icents = read_parquet(spark, state.ensure("pq_icents", sf_dir, build_icents))
 
     def res_comps() -> DataFrame:
         # (vec_id, sub, pos, xs): exact-integer residuals vs the assigned
@@ -3121,8 +3094,7 @@ def pq_index_state(
             cb = pq_refine_step(comps, cb)
         cb.write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(cb_path, cb_path + ".done", _PQ_CB_TPL.format(tag="*"), build_cb)
-    cb = read_parquet(spark, cb_path)
+    cb = read_parquet(spark, state.ensure("pq_cb", sf_dir, build_cb))
 
     def build_codes(tmp: str) -> None:
         from d3d_etl_spark.operators.pq import pq_encode_comps
@@ -3131,10 +3103,7 @@ def pq_index_state(
             "vec_id", "sub", "code"
         ).write.mode("overwrite").parquet(tmp)
 
-    _ensure_ivf_state(
-        codes_path, codes_path + ".done", _PQ_CODES_TPL.format(tag="*"), build_codes
-    )
-    return icents, cb, read_parquet(spark, codes_path)
+    return icents, cb, read_parquet(spark, state.ensure("pq_codes", sf_dir, build_codes))
 
 
 # Candidates come from the persisted IVF cell state (the _INC_PROBE_CTES

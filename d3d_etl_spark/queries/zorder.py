@@ -30,6 +30,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d3d_etl_spark import state
 from d3d_etl_spark.functions.money import cents
 from d3d_etl_spark.io import load_table, read_parquet
 from d3d_etl_spark.queries.registry import register
@@ -178,8 +179,8 @@ def z_io_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 # zone map against the written layout, with the pruning contract enforced
 # inside the query body (like z_bucketed_spine's zero-exchange raise).
 #
-# Layout + per-bucket stats are S19-memoized per scale (the write shuffle
-# is paid once, exactly as OPTIMIZE ZORDER would be); each run reads the
+# Layout + per-bucket stats are persisted once per events table (the write
+# shuffle is paid once, exactly as OPTIMIZE ZORDER would be); each run reads the
 # <= 2^_Z_BUCKET_BITS-row stats table, computes the candidate buckets for
 # a data-derived mid-range user band (lo = 3*umax div 10, hi = 4*umax
 # div 10 — deterministic in both engines), and reads ONLY those partition
@@ -189,14 +190,9 @@ def z_io_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
     """(layout_path, stats_df): the z-ordered events layout and its
-    per-bucket zone-map stats, built once per scale under .domain_cache.
-    The stats parquet is written in the same materialized family as the
-    layout so they can never desync."""
-    from d3d_etl_spark.queries.domain import _CACHE_DIR, _ensure_materialized, sf_tag
-
-    tag = sf_tag(sf_dir)
-    path = os.path.join(_CACHE_DIR, f"zordered_events_{tag}")
-    marker = path + ".done"
+    per-bucket zone-map stats, persisted once per events table under
+    .domain_cache. The stats parquet is written in the same state
+    directory as the layout so they can never desync."""
 
     def build(tmp: str) -> None:
         ev = load_table(spark, sf_dir, "events")
@@ -208,9 +204,7 @@ def _zorder_layout(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
         )
         z_io_zorder(spark, sf_dir).coalesce(1).write.parquet(os.path.join(tmp, "stats"))
 
-    _ensure_materialized(
-        path, marker, os.path.join(_CACHE_DIR, "zordered_events_*"), build
-    )
+    path = state.ensure("zordered_events", sf_dir, build)
     return os.path.join(path, "data"), read_parquet(spark, os.path.join(path, "stats"))
 
 

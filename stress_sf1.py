@@ -22,7 +22,7 @@ What it does:
          similarities decorrelate to noise.
        - events: id/user shifts (10x users over the same time window).
      The dir name carries the sf token ("sf1") so the pbp game-count rule
-     (queries/domain.py:_games_for) scales to 3000 games by itself.
+     (pbp/synth.py:games_for) scales to 3000 games by itself.
   2. Runs the three flagships (corpus_pipeline, z_sim_pipeline, z_pbp_dag)
      plus the EXTRA_SHAPES heavy tier
      at sf0.1 and sf1 IN THE SAME SESSION (noop sink, no driver collect),
@@ -707,23 +707,12 @@ def run_registry_audit(spark: SparkSession, qs: dict, app: str) -> int:
     # parquet-read, not a build). Delete the serving-state families for
     # the two audited scales first, so the timed leg is the real one-time
     # index construction; everything downstream then runs warm as before.
-    import shutil
+    from d3d_etl_spark import state
 
-    from d3d_etl_spark.queries.domain import _CACHE_DIR
-    from d3d_etl_spark.queries.domain import sf_tag as _sf_tag
-
-    _SRV_FAMILIES = (
-        "ivf_cents_s", "ivf_assign_s", "pq_icents_r", "pq_cb_r", "pq_codes_r"
-    )
     state_build: dict = {}
     for tag, d in (("sf0.1", SRC), ("sf1", DST)):
-        for fam in _SRV_FAMILIES:
-            base = os.path.join(_CACHE_DIR, f"{fam}_{_sf_tag(d)}")
-            shutil.rmtree(base, ignore_errors=True)
-            try:
-                os.remove(base + ".done")
-            except FileNotFoundError:
-                pass
+        for fam in ("ivf_cents", "ivf_assign", "pq_icents", "pq_cb", "pq_codes"):
+            state.drop(fam, d)
         t0 = time.time()
         ivf_index_state(spark, d)
         pq_index_state(spark, d)

@@ -1,9 +1,10 @@
-"""Round-7: per-scale side-by-side `.domain_cache` (VERDICT r6 missing #5).
+"""Round-7: side-by-side `.domain_cache` instances (VERDICT r6 missing #5).
 
 Scales no longer prune each other on a switch — verify (sf0.01) and bench
 (sf0.1) can alternate with zero cold rebuilds. Oracle SQL stays
 unambiguous because run_oracle / oracle_sql() rewrite each family's
-'<family>_*' glob to the scale-keyed directory via resolve_cache_globs.
+'<family>_*' glob to the directory keyed for the data dir via
+resolve_cache_globs (d3d_etl_spark/state.py).
 """
 
 from __future__ import annotations
@@ -11,63 +12,65 @@ from __future__ import annotations
 import glob
 import os
 
+from d3d_etl_spark import state
 from d3d_etl_spark.oracle import resolve_cache_globs
+from tests.conftest import TEST_SF_DIR
+
+_DATA = os.path.dirname(TEST_SF_DIR)
 
 
 def test_resolve_cache_globs_rewrites_every_family():
-    import d3d_etl_spark.queries as qmod
-
-    qmod.load_all()  # registrations happen at query-module import
-    sql = (
-        "FROM read_parquet('/x/.domain_cache/parsed_pbp_*/*.parquet') a "
-        "JOIN read_parquet('/x/.domain_cache/lsh_bands_*/*.parquet') b "
-        "JOIN read_parquet('/x/.domain_cache/ivf_cents_s_*/*.parquet') c "
-        "JOIN read_parquet('/x/.domain_cache/pq_codes_r_*/*.parquet') d "
-        "JOIN read_parquet('/x/.domain_cache/bucketed_spine_*/*.parquet') e"
+    sql = " JOIN ".join(
+        f"read_parquet('/x/.domain_cache/{fam}_*/*.parquet')" for fam in state.FAMILIES
     )
-    out = resolve_cache_globs(sql, "/root/testdata/sf0.01")
-    assert "parsed_pbp_30/" in out  # max(10, 0.01*3000)
-    assert "bucketed_spine_30/" in out
-    assert "lsh_bands_0p01/" in out
-    assert "ivf_cents_s_0p01/" in out
-    assert "pq_codes_r_0p01/" in out
+    small, big = os.path.join(_DATA, "sf0.01"), os.path.join(_DATA, "sf0.1")
+    out = resolve_cache_globs(sql, small)
+    for fam in state.FAMILIES:
+        assert f"/{fam}_{state.key(fam, small)}/" in out, fam
     assert "_*/" not in out  # nothing left ambiguous
-    # a different scale resolves differently (side-by-side is meaningful)
-    assert "parsed_pbp_300/" in resolve_cache_globs(sql, "/root/testdata/sf0.1")
+    # a different scale resolves every family differently (side-by-side is
+    # meaningful): the game count and the input tables both differ
+    out_big = resolve_cache_globs(sql, big)
+    for fam in state.FAMILIES:
+        assert f"/{fam}_{state.key(fam, big)}/" in out_big, fam
+        assert state.key(fam, big) != state.key(fam, small), fam
 
 
 def test_cache_scales_coexist(spark):
     """Building the same state family at two scales leaves BOTH directories
     live (the round-6 thrash: each build used to prune the other scale)."""
-    from d3d_etl_spark.queries.dedup import _STATE_PATH_TPL, batch1_band_state
+    from d3d_etl_spark.queries.dedup import batch1_band_state
 
-    batch1_band_state(spark, "/root/testdata/sf0.001")
-    batch1_band_state(spark, "/root/testdata/sf0.01")
-    for tag in ("0p001", "0p01"):
-        path = _STATE_PATH_TPL.format(tag=tag)
+    dirs = (os.path.join(_DATA, "sf0.001"), os.path.join(_DATA, "sf0.01"))
+    for d in dirs:
+        batch1_band_state(spark, d)
+    for d in dirs:
+        path = state.path("lsh_bands", d)
         assert os.path.isdir(path), path
         assert os.path.exists(path + ".done"), path
 
 
 def test_cache_lru_sweep_keeps_newest(tmp_path, monkeypatch):
-    """Beyond _CACHE_LRU_KEEP scales, the least-recently-used family
-    members are evicted (bounded disk), newest-first survivors."""
-    from d3d_etl_spark.queries import domain
+    """Beyond LRU_KEEP instances, the least-recently-used family members
+    are evicted (bounded disk), newest-first survivors."""
+    monkeypatch.setattr(state, "ROOT", str(tmp_path / "cache"))
+    monkeypatch.setattr(state, "LRU_KEEP", 2)
+    monkeypatch.setitem(state.FAMILIES, "fam", state.Family(1, tables=("t",)))
 
-    monkeypatch.setattr(domain, "_CACHE_LRU_KEEP", 2)
-    fam_glob = str(tmp_path / "fam_*")
-
-    def mk(tag: str, t: float) -> None:
-        p = str(tmp_path / f"fam_{tag}")
-        domain._ensure_materialized(p, p + ".done", fam_glob, os.makedirs)
+    def mk(tag: str, t: float) -> str:
+        d = tmp_path / tag
+        d.mkdir()
+        (d / "t.parquet").write_text(tag)
+        p = state.ensure("fam", str(d), os.makedirs)
         os.utime(p + ".done", (t, t))
+        return p
 
-    mk("a", 1_000_000.0)
-    mk("b", 2_000_000.0)
+    a = mk("a", 1_000_000.0)
+    b = mk("b", 2_000_000.0)
     # building c sweeps: keep newest 2 of {a, b, c}; c's marker is "now"
-    mk("c", 3_000_000.0)
+    c = mk("c", 3_000_000.0)
     live = sorted(
-        os.path.basename(d) for d in glob.glob(fam_glob) if os.path.isdir(d)
+        d for d in glob.glob(os.path.join(state.ROOT, "fam_*")) if os.path.isdir(d)
     )
-    assert live == ["fam_b", "fam_c"], live
-    assert not os.path.exists(str(tmp_path / "fam_a.done"))
+    assert live == sorted([b, c]), live
+    assert not os.path.exists(a + ".done")

@@ -174,17 +174,16 @@ def test_write_sizing_and_compaction(spark, sf_dir, tmp_path):
     assert back.count() == n
 
 
-def test_ensure_table_builds_once(spark, tmp_path):
-    from d3d_etl_spark.io import ensure_table
+def test_table_count_sees_table_rewritten_in_place(spark, tmp_path):
+    """The row-count memo is keyed on the table file's identity, not on
+    (dir, name): a table rewritten in place is counted again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    calls = []
+    from d3d_etl_spark.io import table_count
 
-    def build():
-        calls.append(1)
-        return spark.range(10).selectExpr("id", "id * 2 AS v")
-
-    path = str(tmp_path / "memo")
-    a = ensure_table(spark, path, build)
-    b = ensure_table(spark, path, build)
-    assert a.count() == b.count() == 10
-    assert len(calls) == 1  # second call scanned, didn't rebuild
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": list(range(3))}), path)
+    assert table_count(spark, str(tmp_path), "region") == 3
+    pq.write_table(pa.table({"r_regionkey": list(range(5))}), path)
+    assert table_count(spark, str(tmp_path), "region") == 5

@@ -187,10 +187,12 @@ def test_pq_incremental_state_discipline(spark, sf_dir):
     # assert the persisted state exists on disk and the raw embeddings
     # appear only for the new-batch scan
     import glob
+    import os
 
-    from d3d_etl_spark.queries.simsearch import _PQ_CODES_GLOB
+    from d3d_etl_spark import state
 
-    assert glob.glob(_PQ_CODES_GLOB), _PQ_CODES_GLOB
+    codes = state.path("pq_codes", sf_dir)
+    assert glob.glob(os.path.join(codes, "*.parquet")), codes
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("embeddings.parquet") <= 2  # new-batch scan only
 
